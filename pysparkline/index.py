@@ -882,18 +882,28 @@ def dir_column_bytes_per_row(
     }
 
 
+def _visible_parquet_paths(path: str):
+    """Parquet files under ``path`` that a Spark scan reads: like Spark's
+    file index, skip names starting with '.' or '_' (crc files,
+    ``_temporary`` staging) unless a '_' name is a ``col=value`` directory."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        for f in files:
+            if f.endswith(".parquet") and not hidden(f):
+                yield os.path.join(root, f)
+
+
 def dir_parquet_bytes(path: str) -> int:
     """Total on-disk bytes of the parquet files under ``path`` — driver-side
     listing of files this process just wrote (local/posix; an object-store
     deployment would take the same sizes from the commit manifest instead of
     a walk). Feeds the manifest's ``bytesPerRow`` stamps, which the planner's
     cost tie-breaker consumes."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+    return sum(os.path.getsize(p) for p in _visible_parquet_paths(path))
 
 
 def measure_bytes_per_row(
@@ -2242,6 +2252,10 @@ class OlapIndex:
                 ).to_pylist()
         return self._cube_manifests[name]
 
+    def cube_cached(self, name: str) -> bool:
+        """True once ``cache_cubes`` has pinned cube ``name`` in memory."""
+        return f"cube_{name}__base" in self._cached
+
     def cube_input_files(self, name: str) -> list[str]:
         """Current file listing for one cube (memoized per epoch)."""
         if name not in self._cube_files:
@@ -2306,11 +2320,7 @@ class OlapIndex:
         — and splits of foreign single-row-group files are empty work —
         while 16 MB keeps every core fed at the bench scale. Returns
         the chosen byte size."""
-        total = 0
-        for root, _dirs, files in os.walk(self.flat_root()):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(root, f))
+        total = dir_parquet_bytes(self.flat_root())
         par = max(1, self.spark.sparkContext.defaultParallelism)
         want = int(min(max(total // (per_core * par), floor), ceil))
         self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(want))
@@ -2339,75 +2349,6 @@ class OlapIndex:
             self._df_memo[key] = df
         return df
 
-    def _scan_partitions(self, rel_path: str, base: DataFrame) -> int:
-        """Scan-partition count of a parquet directory, from file metadata.
-
-        Reproduces FilePartition.maxSplitBytes + getFilePartitions (next-fit
-        decreasing over maxSplitBytes-sized pieces, openCostInBytes charged
-        per piece) so the answer matches ``base.rdd.getNumPartitions()``
-        bit-for-bit — WITHOUT the full physical-planning pass that ``.rdd``
-        forces per call (profiled 2.1 s of driver wall on a cold session's
-        first cube query; pinned equal by test_cube_layout's estimator
-        test). Falls back to ``.rdd`` when the files aren't stat-able
-        (non-local cache roots)."""
-        conf = self.spark.conf
-        try:
-            sizes = []
-            for root, _dirs, files in os.walk(os.path.join(self.path, rel_path)):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        sizes.append(os.path.getsize(os.path.join(root, f)))
-            if not sizes:
-                return base.rdd.getNumPartitions()
-
-            def _bytes(key: str, default: int) -> int:
-                v = str(conf.get(key, str(default))).lower().strip()
-                units = {"kb": 10, "mb": 20, "gb": 30, "tb": 40,
-                         "k": 10, "m": 20, "g": 30, "t": 40, "b": 0}
-                for suf, shift in units.items():
-                    if v.endswith(suf):
-                        try:
-                            return int(float(v[: -len(suf)])) << shift
-                        except ValueError:
-                            return default
-                try:
-                    return int(v)
-                except ValueError:
-                    return default
-
-            max_part = _bytes("spark.sql.files.maxPartitionBytes", 128 << 20)
-            open_cost = _bytes("spark.sql.files.openCostInBytes", 4 << 20)
-            try:
-                min_parts = int(conf.get("spark.sql.files.minPartitionNum"))
-            except Exception:  # noqa: BLE001 — unset: leaf default parallelism
-                try:
-                    min_parts = int(
-                        conf.get("spark.sql.leafNodeDefaultParallelism")
-                    )
-                except Exception:  # noqa: BLE001
-                    min_parts = self.spark.sparkContext.defaultParallelism
-            total = sum(s + open_cost for s in sizes)
-            bytes_per_core = total // max(1, min_parts)
-            max_split = min(max_part, max(open_cost, bytes_per_core))
-            pieces: list[int] = []
-            for s in sizes:
-                while s > max_split:
-                    pieces.append(max_split)
-                    s -= max_split
-                if s > 0:
-                    pieces.append(s)
-            pieces.sort(reverse=True)
-            nparts = 0
-            cur = max_split + 1  # force-open the first partition
-            for p in pieces:
-                if cur + p > max_split:
-                    nparts += 1
-                    cur = 0
-                cur += p + open_cost
-            return max(1, nparts)
-        except OSError:
-            return base.rdd.getNumPartitions()
-
     def cube_df(self, name: str) -> DataFrame:
         key = f"cube_{name}"
         df = self._df_memo.get(key)
@@ -2417,13 +2358,18 @@ class OlapIndex:
             # file-split count: a tiny cube must not pay 32 tasks per scan,
             # and a huge one must not collapse below the fleet size. coalesce
             # is a narrow wrapper OVER the (possibly cached) base, so the
-            # in-memory columnar cache is still hit.
+            # in-memory columnar cache is still hit. The visible file count
+            # stands in for the scan width, read without planning the scan.
+            # A cube with no more files than ``want`` is left unwrapped:
+            # even a width-neutral Coalesce(1) reports SinglePartition and
+            # drops the aggregate's exchange, which ran slower on such cubes.
             info = self.manifest["cubes"][name]
             by_rows = -(-int(info["rowCount"]) // self.CUBE_ROWS_PER_PARTITION)
             cap = 2 * self.spark.sparkContext.defaultParallelism
             want = max(1, min(by_rows, cap))
-            nparts = self._scan_partitions(info["path"], base)
-            df = base.coalesce(want) if want < nparts else base
+            root = os.path.join(self.path, info["path"])
+            nfiles = sum(1 for _ in _visible_parquet_paths(root))
+            df = base.coalesce(want) if want < nfiles else base
             self._df_memo[key] = df
         return df
 

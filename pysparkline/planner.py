@@ -1052,7 +1052,10 @@ def prune_cube_files(
     requires bucket-aligned intervals. Cube manifests hold files × grain
     columns (small at any data scale — file count is byte-floored), so the
     per-row walk suffices; unmanifested files (streaming appends before
-    compaction) are always kept."""
+    compaction) are always kept. A cached cube is never pruned: the kept
+    files would be re-read from disk, bypassing the in-memory copy."""
+    if index.cube_cached(name):
+        return None
     rows_fn = getattr(index, "cube_file_manifest", None)
     rows = rows_fn(name) if rows_fn is not None else None
     if rows is None:

@@ -442,15 +442,60 @@ def test_tune_read_parallelism_clamps(ctx):
         spark.conf.set("spark.sql.files.maxPartitionBytes", before)
 
 
-def test_scan_partitions_estimate_matches_spark(ctx):
-    """The metadata-only scan-partition estimator must reproduce Spark's
-    FilePartition packing bit-for-bit — cube_df's coalesce decision (and so
-    every cube-served plan) hangs on it, and the estimator exists precisely
-    to avoid the full physical-planning pass `.rdd.getNumPartitions()`
-    forces (r12: profiled 2.1 s of driver wall on a cold session)."""
-    idx = ctx.index
-    for name in idx.manifest["cubes"]:
-        base = idx._cube_base(name)
-        est = idx._scan_partitions(idx.manifest["cubes"][name]["path"], base)
-        actual = base.rdd.getNumPartitions()
-        assert est == actual, (name, est, actual)
+def test_cube_df_width_is_capped_scan_width(ctx):
+    """cube_df narrows a cube to its row-sized ``want`` and never widens
+    it: every cube scans at min(want, native scan width), uncached and
+    once its base is cached."""
+    idx = OlapIndex.load(ctx.spark, ctx.index.path)
+    par = ctx.spark.sparkContext.defaultParallelism
+    try:
+        for cached in (False, True):
+            if cached:
+                idx.cache_cubes()
+            for name, info in idx.manifest["cubes"].items():
+                by_rows = -(-int(info["rowCount"]) // idx.CUBE_ROWS_PER_PARTITION)
+                want = max(1, min(by_rows, 2 * par))
+                native = idx._cube_base(name).rdd.getNumPartitions()
+                got = idx.cube_df(name).rdd.getNumPartitions()
+                assert got == min(want, native), (name, cached, got, want, native)
+    finally:
+        idx.invalidate()
+
+
+def test_cached_cube_skips_file_pruning(spark, tmp_path):
+    """Once cubes are cached, a filtered cube query reads the in-memory
+    copy: manifest pruning would re-read the kept files from disk."""
+    flat = _synth_flat(spark)
+    cfg = IndexConfig(
+        time_col="ts",
+        metrics=[MetricSpec("v", "v", "sum")],
+        cubes=[CubeSpec("k", ("k",), "month")],
+        target_file_bytes=0,
+        files_per_time_partition=8,
+    )
+    idx = OlapIndex.build(spark, flat, cfg, str(tmp_path / "idx"))
+    q = ir.GroupByQuery(
+        dimensions=[ir.DefaultDim("k")],
+        filter=ir.SelectorFilter("k", "k3"),
+        aggregations=[ir.FieldAgg("sum", "sv", "v"), ir.CountAgg("n")],
+    )
+    assert planner.prune_cube_files(idx, "k", q) is not None
+    idx.cache_cubes()
+    try:
+        assert planner.prune_cube_files(idx, "k", q) is None
+        ctx = OlapContext(spark, idx)
+        df = ctx.query(q)
+        assert ctx.query_history[-1].backing == "cube"
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        got = {tuple(r) for r in df.collect()}
+        exp = {
+            tuple(r)
+            for r in flat.where("k = 'k3'")
+            .groupBy("k")
+            .agg(F.sum("v").alias("sv"), F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        assert got == exp
+    finally:
+        idx.invalidate()

@@ -737,30 +737,28 @@ def test_lsh_candidate_stages_pinned_at_fleet_width(spark):
     assert plan.count("REPARTITION_BY_NUM") >= 2
 
 
-def test_pinned_shuffle_skips_already_partitioned_input(spark):
-    """pinned_shuffle must be a no-op when the input is already
-    hash-partitioned on the same keys at >= the configured width (a
-    bucketed table or an upstream repartition) — the forced exchange was
-    pure overhead there (VERDICT r11 #3) — while narrow inputs still get
-    the pin, and different-key partitionings are re-pinned."""
+def test_pinned_shuffle_always_pins_one_exchange(spark):
+    """pinned_shuffle always ends in exactly one user-pinned exchange
+    (REPARTITION_BY_NUM) on its keys, whatever the input's partitioning:
+    an upstream repartition on the same keys collapses into the pin, and
+    an unpinned ``repartition(col)`` input, whose REPARTITION_BY_COL
+    exchange AQE would coalesce, must not survive."""
     from pyspark.sql import functions as F
 
     from pysparkline.operators.util import pinned_shuffle
 
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     df = spark.range(0, 1000).withColumn("user_id", F.col("id") % 50)
-    pre = df.repartition(n, "user_id")
-    assert pinned_shuffle(pre, "user_id") is pre  # satisfied: no exchange
-    # subset of the requested keys is also satisfied (co-location holds)
-    assert pinned_shuffle(pre, "user_id", "id") is pre
-    # narrow / differently-keyed inputs still pay exactly one pin
-    for inp in (df, df.repartition(n, "id")):
-        out = pinned_shuffle(inp, "user_id")
-        assert out is not inp
-        assert _physical(out).count("REPARTITION_BY_NUM") == 1
-    # fewer partitions than the configured width: re-pin (width is the point)
-    under = df.repartition(max(1, n - 1), "user_id")
-    assert pinned_shuffle(under, "user_id") is not under
+    for inp in (
+        df.repartition("user_id"),
+        df.repartition(n, "user_id"),
+        df.repartition(max(1, n - 1), "user_id"),
+        df.repartition(n, "id"),
+        df,
+    ):
+        plan = _physical(pinned_shuffle(inp, "user_id"))
+        assert plan.count("REPARTITION_BY_NUM") == 1, plan
+        assert "REPARTITION_BY_COL" not in plan, plan
 
 
 def test_event_window_over_prepartitioned_input_adds_no_exchange(spark):
