@@ -89,20 +89,22 @@ def sweep_uncommitted_dirs(root: str, committed: set[str]) -> None:
 
 class BatchLedger:
     """The committed-batch manifest discipline shared by the incremental
-    stores (SignatureStore, SubstringStore): batch directories live under
-    ``<path>/batches/<name>``, the JSON manifest lists COMMITTED batch
-    entries ``{"name", "ts"}`` plus store-specific parameters, and every
-    mutation is one atomic manifest rewrite (``atomic_json_dump``) — so a
-    crash mid-append leaves an orphan directory readers never see, and a
-    failed rewrite rolls the in-memory view back to match disk.
+    stores (every ``dedup.FingerprintStore`` and ``search.TextIndex``):
+    batch directories live under ``<path>/batches/<name>``, the JSON
+    manifest lists COMMITTED batch entries ``{"name", "ts"}`` plus
+    store-specific parameters, and every mutation is one atomic manifest
+    rewrite (``atomic_json_dump``) — so a crash mid-append leaves an orphan
+    directory readers never see, and a failed rewrite rolls the in-memory
+    view back to match disk.
 
     Extracted in round 6's follow-up because three stores carried private
     copies of this protocol and drifted twice (orphan sweep, retention
     stamping — and SignatureStore's manifest writer missed the fsync
-    upgrade entirely). Single-writer, like the stores themselves.
-    IvfIndex keeps its own ordinal ``cells_b<N>`` top-level layout (its
-    manifest predates the ``batches`` schema) but shares
-    ``atomic_json_dump`` and ``sweep_uncommitted_dirs``.
+    upgrade entirely). Each store keeps ONE ledger over its manifest dict.
+    Single-writer, like the stores themselves. IvfIndex keeps its own
+    ordinal ``cells_b<N>`` top-level layout (its manifest predates the
+    ``batches`` schema) but shares ``atomic_json_dump`` and
+    ``sweep_uncommitted_dirs``.
     """
 
     def __init__(self, path: str, manifest: dict, manifest_file: str):
@@ -131,28 +133,33 @@ class BatchLedger:
         write_files,
         extra: dict | None = None,
         ts: float | None = None,
-    ) -> str:
+    ) -> str | None:
         """Write a fresh batch directory via ``write_files(bdir)``, then
         commit its name — with ``extra`` manifest keys landing in the SAME
         atomic rewrite (streaming exactly-once relies on the batch append
-        and its stream-batch marker committing together). On a failed
+        and its stream-batch marker committing together). ``write_files``
+        None commits ``extra`` alone, with no batch directory. On a failed
         rewrite the in-memory view rolls back so this session doesn't read
-        the orphan either. Returns the batch name."""
+        the orphan either. Returns the batch name (None when no batch
+        directory was written)."""
         import time
         import uuid
 
         m = self.manifest
-        name = uuid.uuid4().hex[:12]
-        write_files(self.batch_dir(name))
-        m["batches"].append(
-            {"name": name, "ts": time.time() if ts is None else ts}
-        )
+        name = None
+        if write_files is not None:
+            name = uuid.uuid4().hex[:12]
+            write_files(self.batch_dir(name))
+            m["batches"].append(
+                {"name": name, "ts": time.time() if ts is None else ts}
+            )
         before = {k: m.get(k) for k in (extra or {})}
         m.update(extra or {})
         try:
             self.write_manifest()
         except BaseException:
-            m["batches"].pop()
+            if name is not None:
+                m["batches"].pop()
             for k, v in before.items():
                 if v is None:
                     m.pop(k, None)

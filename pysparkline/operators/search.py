@@ -258,9 +258,12 @@ class TextIndex:
     MANIFEST = "text_manifest.json"
 
     def __init__(self, spark, path: str, manifest: dict):
+        from ..index import BatchLedger
+
         self.spark = spark
         self.path = path
         self.manifest = manifest
+        self._ledger = BatchLedger(path, manifest, TextIndex.MANIFEST)
 
     @staticmethod
     def build(
@@ -300,10 +303,9 @@ class TextIndex:
             "textCol": text_col,
             "batches": [],
         }
-        from ..index import atomic_json_dump
-
-        atomic_json_dump(manifest, os.path.join(path, TextIndex.MANIFEST))
-        return TextIndex(spark, path, manifest)
+        ti = TextIndex(spark, path, manifest)
+        ti._ledger.write_manifest()
+        return ti
 
     @staticmethod
     def load(spark, path: str) -> "TextIndex":
@@ -325,16 +327,12 @@ class TextIndex:
         m.setdefault("totalDlExact", True)
         return TextIndex(spark, path, m)
 
-    def _ledger(self):
-        from ..index import BatchLedger
-
-        return BatchLedger(self.path, self.manifest, TextIndex.MANIFEST)
-
     def _postings_paths(self) -> list[str]:
         import os
 
-        return [os.path.join(self.path, "postings")] + self._ledger(
-        ).batch_paths("postings")
+        return [
+            os.path.join(self.path, "postings")
+        ] + self._ledger.batch_paths("postings")
 
     def _read_postings_raw(self) -> DataFrame:
         """All committed postings rows (base + batches), unfiltered."""
@@ -350,7 +348,7 @@ class TextIndex:
         self, docs: DataFrame, id_col: str | None = None,
         text_col: str | None = None,
     ) -> str | None:
-        """Incremental ingest (the SignatureStore/IvfIndex committed-batch
+        """Incremental ingest (the index.BatchLedger committed-batch
         discipline): the new documents' postings land as a batch directory,
         and the corpus constants (nDocs, totalDl -> avgdl) update in the
         SAME atomic manifest rewrite — a crash mid-append leaves an orphan
@@ -406,41 +404,25 @@ class TextIndex:
         denorm = postings.join(doclens, "doc_id").withColumn(
             "__bucket", F.pmod(F.hash(F.col("term")), F.lit(nb))
         ).persist()
+
+        def write_postings(bdir: str) -> None:
+            denorm.write.partitionBy("__bucket").parquet(
+                os.path.join(bdir, "postings")
+            )
+
         try:
-            if denorm.limit(1).count() == 0:
-                # docs exist but none has a token (review r7b #1: the
-                # empty-POSTINGS guard, not empty-docs — a 0-row
-                # partitioned parquet write produces a file-less dir
-                # that poisons every later read). Token-free docs still
-                # count toward nDocs/avgdl (BM25 corpus stats), so the
-                # constants update lands as ONE atomic manifest rewrite
-                # with no batch directory (in-memory view rolled back on
-                # a failed rewrite, the BatchLedger discipline).
-                before = {k: self.manifest.get(k) for k in extra}
-                self.manifest.update(extra)
-                try:
-                    self.write_manifest_atomic()
-                except BaseException:
-                    self.manifest.update(before)
-                    raise
-                return None
-            return self._ledger().commit_batch(
-                lambda bdir: denorm.write.partitionBy("__bucket").parquet(
-                    os.path.join(bdir, "postings")
-                ),
-                extra=extra,
+            # docs exist but none has a token (review r7b #1: the
+            # empty-POSTINGS guard, not empty-docs — a 0-row partitioned
+            # parquet write produces a file-less dir that poisons every
+            # later read). Token-free docs still count toward nDocs/avgdl
+            # (BM25 corpus stats), so the ledger commits the constants
+            # alone, in ONE atomic manifest rewrite with no batch directory
+            has_postings = denorm.limit(1).count() > 0
+            return self._ledger.commit_batch(
+                write_postings if has_postings else None, extra=extra
             )
         finally:
             denorm.unpersist(blocking=False)
-
-    def write_manifest_atomic(self) -> None:
-        import os
-
-        from ..index import atomic_json_dump
-
-        atomic_json_dump(
-            self.manifest, os.path.join(self.path, TextIndex.MANIFEST)
-        )
 
     def compact(self) -> None:
         """Merge all appended batches into one (fewer files/scans per
@@ -450,7 +432,7 @@ class TextIndex:
         re-laid-out). Crashed-append orphans are swept."""
         import os
 
-        ledger = self._ledger()
+        ledger = self._ledger
         if not self.manifest["batches"]:
             from ..index import sweep_uncommitted_dirs
 

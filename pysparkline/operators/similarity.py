@@ -386,8 +386,9 @@ class IvfIndex:
     Incremental ingest (round 6): ``append`` assigns NEW vectors to the
     EXISTING centroids (no refit — standard IVF ingestion) and lands them
     as an additional cell-partitioned batch directory, committed by an
-    atomic manifest rewrite — the same committed-batch layout as
-    SignatureStore: a crash mid-write leaves an unreferenced directory
+    atomic manifest rewrite — the commit-after-write order of
+    index.BatchLedger, over this index's own ordinal ``cells_b<N>``
+    directories: a crash mid-write leaves an unreferenced directory
     search never reads. ``compact`` folds all batches back into one
     directory (same atomic commit). Centroid-drift caveat: appended
     distributions the centroids never saw skew cell sizes and degrade

@@ -1025,18 +1025,7 @@ def prune_flat_files(
                 if np_ in passing or np_ not in manifested_n
             ]
     else:
-        by_norm = {_norm_path(k): v for k, v in fm.items()}
-        keep = []
-        for path in all_files:
-            row = by_norm.get(_norm_path(path))
-            if row is None:
-                keep.append(path)
-                continue
-            ok = not ivs or _intervals_overlap(row, tcol, ivs)
-            if ok and f is not None:
-                ok = _file_passes(row, f)
-            if ok:
-                keep.append(path)
+        return _prune_files_per_row(all_files, list(fm.values()), tcol, q)
     if len(keep) == len(all_files):
         return None
     return keep, len(all_files)
@@ -1068,8 +1057,9 @@ def _prune_files_per_row(
     files: list[str], rows: list, time_col: str, q: ir.QuerySpec
 ) -> tuple[list[str], int] | None:
     """Per-row manifest walk shared by cube and projection pruning (their
-    manifests are byte-floored-small; the flat path keeps its vectorized
-    arrow pass). Same conservative semantics as prune_flat_files."""
+    manifests are byte-floored-small) and by the flat path when it has
+    only a dict manifest (its arrow table gets the vectorized pass).
+    Same conservative semantics as prune_flat_files."""
     f = getattr(q, "filter", None)
     ivs = getattr(q, "intervals", None) or []
     if f is None and not ivs:

@@ -790,6 +790,89 @@ def test_substring_store_stream_batch_exactly_once(spark, tmp_path):
     assert store.manifest["lastStreamBatch"] == 1
 
 
+def test_substring_store_partial_history_falls_back_to_fingerprint(
+    spark, tmp_path
+):
+    """A candidate whose stored-side text is missing from a partial
+    history_docs is decided by the fingerprint match, not silently kept —
+    SubstringStore's half of the partial-history contract."""
+    from pysparkline.operators.dedup import SubstringStore
+
+    run1 = " ".join(f"p{i}" for i in range(12))
+    run2 = " ".join(f"q{i}" for i in range(12))
+    store = SubstringStore.create(spark, str(tmp_path / "ssp"), min_tokens=8)
+    b1 = _mk_docs(
+        spark, [(1, "stored one " + run1), (2, "stored two " + run2)]
+    )
+    store.append(b1, "doc_id", "text")
+
+    # history covers doc 1 only; the new batch shares a run with BOTH
+    probe = _mk_docs(
+        spark,
+        [
+            (10, "new copy of " + run1),
+            (11, "new copy of " + run2),
+            (12, "novel words with no shared run at all here"),
+        ],
+    )
+    v = {
+        r.id: r.kept
+        for r in store.dedup_and_append(
+            probe, "doc_id", "text", history_docs=b1.where("doc_id = 1")
+        ).collect()
+    }
+    # 10 verified by window strings; 11 flagged by its fingerprint match
+    assert v == {10: False, 11: False, 12: True}
+
+
+def test_substring_store_stream_batch_crash_between_verdict_and_commit(
+    spark, tmp_path, monkeypatch
+):
+    """The verdict lands BEFORE the store commit: a crash between the two
+    leaves 'verdict exists, batch not marked done', and the replay
+    recomputes the identical verdict and commits exactly once."""
+    import os
+
+    from pysparkline.operators.dedup import SubstringStore
+
+    run = " ".join(f"v{i}" for i in range(10))
+    store = SubstringStore.create(spark, str(tmp_path / "ssx"), min_tokens=8)
+    vdir = str(tmp_path / "verdicts")
+    store.process_stream_batch(
+        _mk_docs(spark, [(1, "hist " + run), (2, "other stored words")]),
+        0, "doc_id", "text", vdir,
+    )
+    n_batches = len(store.manifest["batches"])
+
+    def crash_write(self, *a, **k):
+        raise RuntimeError("simulated crash before manifest commit")
+
+    batch1 = _mk_docs(
+        spark, [(10, "leak " + run), (11, "fresh novel content here")]
+    )
+    with monkeypatch.context() as mp:
+        mp.setattr(SubstringStore, "_write_batch", crash_write)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            store.process_stream_batch(batch1, 1, "doc_id", "text", vdir)
+
+    bdir = os.path.join(vdir, "batch=1")
+    assert os.path.exists(bdir)
+    assert int(store.manifest.get("lastStreamBatch", -1)) == 0
+    assert len(store.manifest["batches"]) == n_batches
+    crashed = {r.id: r.kept for r in spark.read.parquet(bdir).collect()}
+    assert crashed == {10: False, 11: True}
+
+    store.process_stream_batch(batch1, 1, "doc_id", "text", vdir)
+    assert int(store.manifest["lastStreamBatch"]) == 1
+    assert len(store.manifest["batches"]) == n_batches + 1
+    assert {
+        r.id: r.kept for r in spark.read.parquet(bdir).collect()
+    } == crashed
+    # a second replay of the committed id is a no-op
+    store.process_stream_batch(batch1, 1, "doc_id", "text", vdir)
+    assert len(store.manifest["batches"]) == n_batches + 1
+
+
 def test_canonical_docs_quality_champion(spark):
     """canonical_docs: per-cluster highest-quality member wins (tie by id);
     singletons are their own canonicals; cluster ids are component minima."""

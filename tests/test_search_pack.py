@@ -788,3 +788,38 @@ def test_text_index_append_token_free_docs(spark, docs, tmp_path):
     assert len(ti.search("data quality", k=5).collect()) == 5
     ti2 = TextIndex.load(spark, str(tmp_path / "tf"))
     assert ti2.manifest["nDocs"] == n0 + 2
+
+
+def test_text_index_token_free_append_failed_commit_rolls_back(
+    spark, docs, tmp_path
+):
+    """A token-free append commits only corpus constants; if that manifest
+    rewrite raises, nDocs/totalDl stay unchanged both in memory and on
+    disk, like a failed batch commit."""
+    from pysparkline import index as index_mod
+    from pysparkline.operators.search import TextIndex
+
+    ti = TextIndex.build(
+        spark, docs.where("doc_id % 2 = 0"), str(tmp_path / "tfr"),
+        n_buckets=16,
+    )
+    before = {k: ti.manifest[k] for k in ("nDocs", "totalDl", "avgdl")}
+    punct = spark.createDataFrame(
+        [(10**9, "!!! ???"), (10**9 + 1, "...")], "doc_id long, text string"
+    )
+
+    real_dump = index_mod.atomic_json_dump
+
+    def boom(obj, path):
+        raise OSError("simulated crash before manifest commit")
+
+    index_mod.atomic_json_dump = boom
+    try:
+        with pytest.raises(OSError):
+            ti.append(punct)
+    finally:
+        index_mod.atomic_json_dump = real_dump
+    assert {k: ti.manifest[k] for k in before} == before
+    assert ti.manifest["batches"] == []
+    reloaded = TextIndex.load(spark, str(tmp_path / "tfr"))
+    assert {k: reloaded.manifest[k] for k in before} == before
